@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -178,12 +177,9 @@ def spread_small_scan(
 def max_partition_bytes(spark: SparkSession) -> int:
     """The session's ``spark.sql.files.maxPartitionBytes`` in bytes —
     the natural ``min_bytes`` bound for :func:`spread_small_scan` (one
-    input split's worth of data)."""
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    m = re.match(r"(\d+)([a-zA-Z]*)", raw.strip())
-    mult = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
-            "m": 1 << 20, "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
-    return int(m.group(1)) * mult[m.group(2).lower()]
+    input split's worth of data), parsed by Spark's own typed getter so
+    every byte-string suffix Spark accepts (``1t``, ``64m``, ...) works."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
 # Memo for repeated query builds over the same table: the stat loop is
@@ -219,12 +215,11 @@ def _estimate_splits(spark, files: list, fallback: int) -> tuple:
     ``(file count, None)`` on any error.
     Memoized per (path set, maxPartitionBytes)."""
     try:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        memo_key = (tuple(sorted(files)), raw)
+        max_bytes = max_partition_bytes(spark)
+        memo_key = (tuple(sorted(files)), max_bytes)
         hit = _SPLIT_MEMO.get(memo_key)
         if hit is not None:
             return hit
-        max_bytes = max_partition_bytes(spark)
         jvm = spark._jvm
         hconf = spark._jsc.hadoopConfiguration()
         total = 0

@@ -8,7 +8,9 @@ primitives that make plain DataFrame ops changelog-correct:
 
   materialize(df, keys)   — latest image per key, deletes removed (B5
                             upsert materialization; Flink's planner calls
-                            this ChangelogNormalize)
+                            this ChangelogNormalize); with ``base=`` it
+                            folds changes over a prior live image — the
+                            one keyed-upsert kernel of the engine
   signed_agg(...)         — retraction-aware SUM/COUNT/AVG via signed
                             deltas (B4): rows with op in (-U, -D) count
                             negatively, so a plain groupBy().sum() over
@@ -46,12 +48,47 @@ from flink_cdc_2_3_0_src_spark.model import (
 )
 
 
+# seq of a ``base=`` row: the minimum long, so every change outranks it
+# while the max_by ordering stays a plain long
+_BASE_SEQ = -(1 << 63)
+
+
+def _latest_per_key(
+    df: DataFrame,
+    keys: Sequence[str],
+    seq_col: str,
+    op_col: str,
+    base: Optional[DataFrame],
+) -> tuple[DataFrame, list[str]]:
+    """The one latest-row-per-key aggregation: ``(keys..., __row)`` with
+    ``__row`` the max-seq change image (data columns + ``__op``), plus
+    the data column names.  ``base`` rows enter as +I at ``_BASE_SEQ``."""
+    # DML ops only: -U retraction images are never final state, and +H/+S
+    # control rows carry no row image — either would otherwise become a
+    # ghost latest image (typically of the null key)
+    changes = df.filter(F.col(op_col).isin(OP_INSERT, OP_UPDATE_AFTER, OP_DELETE))
+    if base is not None:
+        changes = changes.unionByName(
+            base.withColumn(op_col, F.lit(OP_INSERT)).withColumn(
+                seq_col, F.lit(_BASE_SEQ)
+            ),
+            allowMissingColumns=True,
+        )
+    data_cols = [c for c in changes.columns if c not in (op_col, seq_col)]
+    payload = F.struct(*[F.col(c) for c in data_cols], F.col(op_col).alias("__op"))
+    latest = changes.groupBy(*[F.col(k) for k in keys]).agg(
+        F.max_by(payload, F.col(seq_col)).alias("__row")
+    )
+    return latest, data_cols
+
+
 def materialize(
     df: DataFrame,
     keys: Sequence[str],
     seq_col: str = SEQ_COL,
     op_col: str = OP_COL,
     keep_meta: bool = False,
+    base: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Latest row image per key with deletes removed (B5).
 
@@ -60,17 +97,14 @@ def materialize(
     sort; at scale this is O(n) with no per-partition sort. -U rows are
     retraction images and never the final state, so they are filtered
     before aggregation (they share the seq of their +U in some encodings).
+
+    ``base`` is a prior live image (key + data columns, no op/seq) that
+    every row of ``df`` supersedes whatever its seq: the upsert sink's
+    state, a chunk scan under its backfill, a snapshot under the stream
+    tail, or maintained table state.  Columns missing on either side
+    are null-filled.  ``keep_meta`` keeps ``_db``/``_table``.
     """
-    data_cols = [c for c in df.columns if c not in (op_col, seq_col)]
-    payload = F.struct(*[F.col(c) for c in data_cols], F.col(op_col).alias("__op"))
-    # DML ops only: -U retraction images are never final state, and +H/+S
-    # control rows carry no row image — either would otherwise become a
-    # ghost latest image (typically of the null key)
-    latest = (
-        df.filter(F.col(op_col).isin(OP_INSERT, OP_UPDATE_AFTER, OP_DELETE))
-        .groupBy(*[F.col(k) for k in keys])
-        .agg(F.max_by(payload, F.col(seq_col)).alias("__row"))
-    )
+    latest, data_cols = _latest_per_key(df, keys, seq_col, op_col, base)
     alive = latest.filter(F.col("__row.__op") != OP_DELETE)
     out_cols = [F.col(f"__row.{c}").alias(c) for c in data_cols if c not in keys]
     result = alive.select(*[F.col(k) for k in keys], *out_cols)
@@ -154,15 +188,7 @@ def compact_changelog(
     contract as a compacted Kafka topic). One max_by aggregation — a
     single shuffle, no window sort.
     """
-    data_cols = [c for c in df.columns if c not in (op_col, seq_col)]
-    payload = F.struct(*[F.col(c) for c in data_cols], F.col(op_col).alias("__op"))
-    # DML ops only: -U is never final state; +H/+S control rows carry
-    # no row image and must not compact into a ghost upsert
-    latest = (
-        df.filter(F.col(op_col).isin(OP_INSERT, OP_UPDATE_AFTER, OP_DELETE))
-        .groupBy(*[F.col(k) for k in keys])
-        .agg(F.max_by(payload, F.col(seq_col)).alias("__row"))
-    )
+    latest, data_cols = _latest_per_key(df, keys, seq_col, op_col, None)
     return latest.select(
         *[F.col(k) for k in keys],
         *[F.col(f"__row.{c}").alias(c) for c in data_cols if c not in keys],
@@ -1088,55 +1114,6 @@ def delta_join_changelog(
 # --------------------------------------------------------------------------
 
 
-def _upsert_table_state(
-    table_old: Optional[DataFrame],
-    batch: DataFrame,
-    keys: Sequence[str],
-    op_col: str,
-    seq_col: str,
-) -> DataFrame:
-    """Materialized live rows after applying a changelog batch to the
-    previous table state: one max_by aggregation ordered by
-    (generation, seq) — old state is generation 0, the batch 1 — so
-    batch changes always supersede carried state regardless of the
-    batch's sequence values."""
-    data_cols = [c for c in batch.columns if c not in (op_col, seq_col)]
-    # Only +I/+U/-D mutate table state (-U is the old image of an
-    # update, superseded by its +U).  Restricting to the DML ops —
-    # mirroring signed_multiset — keeps control rows (+H heartbeats,
-    # +S schema events: no row image, all-null payload) from surviving
-    # as ghost live rows in table state.
-    b = batch.filter(
-        F.col(op_col).isin(OP_INSERT, OP_UPDATE_AFTER, OP_DELETE)
-    ).select(
-        *data_cols,
-        F.col(op_col).alias("__op"),
-        F.lit(1).alias("__gen"),
-        F.col(seq_col).cast("long").alias("__seq"),
-    )
-    allr = b
-    if table_old is not None:
-        o = table_old.select(
-            *data_cols,
-            F.lit(OP_INSERT).alias("__op"),
-            F.lit(0).alias("__gen"),
-            F.lit(0).cast("long").alias("__seq"),
-        )
-        allr = o.unionByName(b)
-    payload = F.struct(
-        *[F.col(c) for c in data_cols], F.col("__op")
-    )
-    latest = allr.groupBy(*keys).agg(
-        F.max_by(payload, F.struct(F.col("__gen"), F.col("__seq"))).alias(
-            "__row"
-        )
-    )
-    return latest.filter(F.col("__row.__op") != OP_DELETE).select(
-        *[F.col(k) for k in keys],
-        *[F.col(f"__row.{c}").alias(c) for c in data_cols if c not in keys],
-    )
-
-
 def split_csv_outside_parens(s: str) -> list:
     """Split a SQL item list on commas OUTSIDE parentheses and string
     literals (``''`` = escaped quote inside a literal), so function
@@ -1270,7 +1247,9 @@ def merge_topn_state(
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     table_old, topn_old = state if state is not None else (None, None)
-    table_new = _upsert_table_state(table_old, batch, keys, op_col, seq_col)
+    table_new = materialize(
+        batch, keys, seq_col, op_col, keep_meta=True, base=table_old
+    )
     order_exprs = _parse_order_sql(order_sql)
     affected = batch.filter(
         F.col(op_col).isin(

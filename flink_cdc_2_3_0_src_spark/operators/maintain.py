@@ -59,8 +59,8 @@ from flink_cdc_2_3_0_src_spark.model import (
 from flink_cdc_2_3_0_src_spark.operators.changelog import (
     MULT_COL,
     _keyset_join,
-    _upsert_table_state,
     expire_state,
+    materialize,
     merge_agg_state,
     merge_join_state,
     merge_topn_state,
@@ -505,7 +505,7 @@ class _DistinctAggPlan(_Plan):
 class _AggRecomputePlan(_Plan):
     """Aggregates including min/max: not retraction-computable without
     state (agg_auto's other branch), so the plan maintains the
-    materialized table (``_upsert_table_state``) and re-aggregates ONLY
+    materialized table (``materialize(base=...)``) and re-aggregates ONLY
     the groups each batch touches — the affected-group recompute shape
     merge_topn_state uses for ranks, applied to aggregates.  Per-batch
     work is bounded by the affected groups' sizes, never the table.
@@ -539,8 +539,9 @@ class _AggRecomputePlan(_Plan):
 
     def step(self, state, batch: DataFrame):
         table_old, agg_old = state if state is not None else (None, None)
-        table_new = _upsert_table_state(
-            table_old, batch, self.keys, self.op_col, self.seq_col
+        table_new = materialize(
+            batch, self.keys, self.seq_col, self.op_col,
+            keep_meta=True, base=table_old,
         )
         affected = _affected_groups(batch, self.group_cols, self.op_col)
         new_agg_aff = (
@@ -586,7 +587,7 @@ class _WindowedRecomputePlan(_AggRecomputePlan):
     recompute:
 
     * ``-U`` → ``-D`` at seq ``2s`` (vacated cells must leave the
-      table; ``_upsert_table_state`` ignores a bare -U, which is what
+      table; ``materialize`` ignores a bare -U, which is what
       made ghost replicas under the PK-only keying)
     * ``+U`` → ``+I`` and ``+I`` at seq ``2s + 1`` (an update whose
       old and new images share a cell resolves insert-last)
@@ -758,7 +759,7 @@ class _SessionPlan(_Plan):
     a row's window is NOT a row-local function of its timestamp — a new
     arrival can MERGE two existing sessions and a retraction can SPLIT
     one — so the plan keeps the materialized table
-    (``_upsert_table_state``, keyed by the source PRIMARY KEY) and
+    (``materialize(base=...)``, keyed by the source PRIMARY KEY) and
     re-sessionizes ONLY the groups each batch touches, the
     affected-group recompute discipline ``_AggRecomputePlan`` and
     ``merge_topn_state`` use.  Per-batch work is bounded by the
@@ -833,8 +834,9 @@ class _SessionPlan(_Plan):
 
     def step(self, state, batch: DataFrame):
         table_old, res_old = state if state is not None else (None, None)
-        table_new = _upsert_table_state(
-            table_old, batch, self.keys, self.op_col, self.seq_col
+        table_new = materialize(
+            batch, self.keys, self.seq_col, self.op_col,
+            keep_meta=True, base=table_old,
         )
         if self.group_cols:
             affected = _affected_groups(batch, self.group_cols, self.op_col)

@@ -79,7 +79,7 @@ def split_evenly_sized_chunks(
     chunks: list[ChunkRange] = []
     start = None
     end = _add(min_key, dynamic)
-    while _lt(end, max_key) or _eq(end, max_key):
+    while end <= max_key:
         chunks.append(ChunkRange(start, end))
         start = end
         end = _add(end, dynamic)
@@ -91,14 +91,6 @@ def _add(v: Any, step: int) -> Any:
     if isinstance(v, int):
         return v + int(step)
     return float(v) + step
-
-
-def _lt(a: Any, b: Any) -> bool:
-    return a < b
-
-
-def _eq(a: Any, b: Any) -> bool:
-    return a == b
 
 
 class ChunkPlanner:

@@ -101,7 +101,7 @@ Semantics notes
   fails the predicate must REMOVE its key from the filtered table: the
   failing +I/+U is rewritten to a ``-D`` tombstone instead of dropped —
   a dropped +U would leave the key's old image live in table state
-  forever (``_upsert_table_state`` ignores lone ``-U`` rows by design).
+  forever (``materialize`` ignores lone ``-U`` rows by design).
   Both directions of predicate-boundary-crossing updates are
   test-pinned.
 * ``COUNT(expr)`` is translated to a signed sum of a non-null
@@ -2361,7 +2361,7 @@ def _where_over_table_state(df: DataFrame, pred_sql: str, op_col: str):
     FAILING the predicate is rewritten to a ``-D`` tombstone (its key
     left the filtered table) rather than dropped — a dropped +U would
     leave the key's old image live forever, since
-    ``_upsert_table_state`` applies only +I/+U/-D and ignores the lone
+    ``materialize`` applies only +I/+U/-D and ignores the lone
     surviving -U.  Retraction rows (-U/-D) pass through: a -D of an
     absent key is a no-op, and a -U's work is done by its paired row's
     rewrite.  A NULL predicate counts as failing (SQL WHERE)."""

@@ -14,8 +14,8 @@ implements (docs/content/connectors/mysql-cdc.md:540-552, SURVEY §3.1):
 Spark mapping: the snapshot phase is a batch job (one partition per
 chunk, range predicates pushed down); the stream phase is Structured
 Streaming (or an incremental batch) with the chunk-HW filter applied as
-a broadcast join / literal predicate. Chunk progress is checkpointed in
-a JSON manifest (A18) so a restart resumes mid-snapshot.
+a literal predicate. Chunk progress is checkpointed in a JSON manifest
+(A18) so a restart resumes mid-snapshot.
 
 The test dialect drives this against the driver's parquet tables with
 the scripted events log as the "binlog": the database state at offset T
@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from flink_cdc_2_3_0_src_spark.model import (
     OP_COL,
-    OP_DELETE,
     OP_INSERT,
     SEQ_COL,
     ChunkRange,
@@ -97,9 +96,9 @@ class HybridPipeline:
     ----------
     log : full upsert changelog DataFrame (key..., payload..., _op, _seq)
     keys : primary-key columns
-    get_offset : () -> int — "SHOW MASTER STATUS" of the test dialect;
-        by default the max _seq in the log (the log tip). Injectable so
-        tests can freeze time per chunk (watermark bracketing, A6).
+    manifest_path : optional JSON snapshot manifest (A18); when set, each
+        finished chunk's watermarks are saved there and a restarted
+        ``run_snapshot_phase`` resumes from it.
     """
 
     def __init__(
@@ -164,10 +163,7 @@ class HybridPipeline:
                 & (F.col(SEQ_COL) <= high_watermark)
                 & in_range
             )
-            as_log = scan.withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
-                SEQ_COL, F.lit(low_watermark).cast("long")
-            )
-            merged = materialize(as_log.unionByName(backfill), self.keys)
+            merged = materialize(backfill, self.keys, base=scan)
         return merged.withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
             SEQ_COL, F.lit(high_watermark).cast("long")
         )
@@ -249,52 +245,6 @@ class HybridPipeline:
         if OP_COL in events.columns:
             return F.col(OP_COL) == OP_SCHEMA
         return F.lit(False)
-
-    def stream_filter_join(
-        self, events: DataFrame, manifest: SnapshotManifest
-    ) -> DataFrame:
-        """A10 at scale: the per-chunk HW filter as a broadcast range
-        join against the chunk-metadata table.
-
-        ``stream_filter`` builds a literal OR-chain — fine for hundreds
-        of chunks, pathological for 100k (expression tree size). Here
-        the manifest becomes a tiny broadcast DataFrame and the filter
-        is one join: an event passes if it is past the table max HW
-        (pure-log fast path, cheap literal) or lands in a chunk whose HW
-        it postdates. Results are identical to stream_filter.
-        """
-        from pyspark.sql import types as T
-
-        spark = events.sparkSession
-        max_hw = manifest.max_high_watermark()
-        # chunk bounds take the SPLIT KEY's type from the event schema —
-        # a hardcoded long here broke string-PK manifests while the rest
-        # of the engine supported them
-        key_type = events.schema[manifest.key].dataType
-        meta_schema = T.StructType(
-            [
-                T.StructField("__start", key_type, True),
-                T.StructField("__end", key_type, True),
-                T.StructField("__hw", T.LongType(), False),
-            ]
-        )
-        meta = spark.createDataFrame(
-            [(c.start, c.end, c.high_watermark) for c in manifest.chunks],
-            meta_schema,
-        )
-        key_col = F.col(manifest.key)
-        cond = (
-            ((F.col("__start").isNull()) | (key_col >= F.col("__start")))
-            & ((F.col("__end").isNull()) | (key_col < F.col("__end")))
-            & (F.col(SEQ_COL) > F.col("__hw"))
-        )
-        always = self._always_emit(events)
-        pure_log = events.filter(always | (F.col(SEQ_COL) > F.lit(max_hw)))
-        backlog = (
-            events.filter(~always & (F.col(SEQ_COL) <= F.lit(max_hw)))
-            .join(F.broadcast(meta), cond, "left_semi")
-        )
-        return pure_log.unionByName(backlog)
 
     def run(
         self,

@@ -11,13 +11,12 @@ row; downstream upsert semantics dedupe the overlap instead of the
 source coordinating watermarks per chunk.
 
 Spark-first restatement: the overlap-merge IS ``materialize``'s
-max-seq-wins contract. Snapshot rows enter the changelog as +I pinned
-at ``seq = stream_start`` — strictly OLDER than every buffered change —
-so any key touched during the overlap window takes its newest change
-image, and untouched keys keep their snapshot image. One union + one
-hash aggregation; no per-chunk watermark state, no driver-side buffer
-(the reference's in-memory ``logMessageBuffer`` becomes ordinary
-partitioned rows).
+max-seq-wins contract. The snapshot image is ``materialize``'s ``base``
+— strictly OLDER than every buffered change — so any key touched during
+the overlap window takes its newest change image, and untouched keys
+keep their snapshot image. One union + one hash aggregation; no
+per-chunk watermark state, no driver-side buffer (the reference's
+in-memory ``logMessageBuffer`` becomes ordinary partitioned rows).
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_cdc_2_3_0_src_spark.model import OP_COL, OP_INSERT, SEQ_COL
+from flink_cdc_2_3_0_src_spark.model import SEQ_COL
 from flink_cdc_2_3_0_src_spark.operators.changelog import materialize
 
 
@@ -50,8 +49,5 @@ def oceanbase_snapshot_stream(
     readChangeRecords before readSnapshotRecords).
     """
     snap = materialize(log.filter(F.col(SEQ_COL) <= snapshot_at), keys)
-    snap_log = snap.withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
-        SEQ_COL, F.lit(stream_start).cast("long")
-    )
     stream = log.filter(F.col(SEQ_COL) > stream_start)
-    return materialize(snap_log.unionByName(stream), keys)
+    return materialize(stream, keys, base=snap)

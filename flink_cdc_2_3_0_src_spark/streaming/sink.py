@@ -1,14 +1,14 @@
 """Upsert (MERGE-style) sink for changelog streams (B5/B13).
 
 ``foreachBatch`` + keyed merge: each microbatch of changelog rows is
-merged into a versioned parquet state table — read current state, union
-with the batch, keep the latest image per key, write a NEW version
-directory, then atomically swap a pointer file. Idempotent under batch
-replay: re-merging the same batch yields the same state, which is what
-makes Structured Streaming's at-least-once delivery exactly-once
-end-to-end (the reference gets this from Flink checkpoints +
-notifyCheckpointComplete, DebeziumSourceFunction.java:106-576; we get it
-from SS checkpointing + an idempotent sink).
+merged into a versioned parquet state table — read current state, fold
+the batch over it (``materialize(batch, keys, base=state)``), write a
+NEW version directory, then atomically swap a pointer file. Idempotent
+under batch replay: re-merging the same batch yields the same state,
+which is what makes Structured Streaming's at-least-once delivery
+exactly-once end-to-end (the reference gets this from Flink checkpoints
++ notifyCheckpointComplete, DebeziumSourceFunction.java:106-576; we get
+it from SS checkpointing + an idempotent sink).
 
 On a real cluster this would be Delta/Iceberg MERGE INTO; the versioned
 parquet + pointer file reproduces the same atomic-visibility contract
@@ -24,7 +24,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_cdc_2_3_0_src_spark.model import OP_COL, OP_DELETE, OP_UPDATE_BEFORE, SEQ_COL
+from flink_cdc_2_3_0_src_spark.model import OP_COL, OP_DELETE, SEQ_COL
 from flink_cdc_2_3_0_src_spark.operators.changelog import materialize
 
 
@@ -63,21 +63,7 @@ class UpsertParquetSink:
 
     def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         """foreachBatch target: keyed merge of one changelog microbatch."""
-        state = self.read_state()
-        # state rows re-enter the merge as +I images with seq below any
-        # batch row (their effects are already folded in)
-        incoming = batch
-        if state is not None:
-            as_log = (
-                state.withColumn(OP_COL, F.lit("+I"))
-                .withColumn(SEQ_COL, F.lit(-1).cast("long"))
-            )
-            incoming = as_log.unionByName(
-                batch.select(*as_log.columns), allowMissingColumns=False
-            )
-        else:
-            incoming = batch
-        new_state = materialize(incoming, self.keys)
+        new_state = materialize(batch, self.keys, base=self.read_state())
         version = f"v{batch_id:010d}"
         out_dir = os.path.join(self.path, version)
         # stage-then-swap: a REPLAYED batch whose version dir is the

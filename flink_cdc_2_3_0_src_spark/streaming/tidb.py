@@ -39,7 +39,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_cdc_2_3_0_src_spark.model import OP_COL, SEQ_COL, ChunkRange
+from flink_cdc_2_3_0_src_spark.model import SEQ_COL, ChunkRange
 from flink_cdc_2_3_0_src_spark.operators.changelog import materialize
 
 LONG_MIN = -(2**63) + 1  # RowKey.createMin / reference Long.MIN_VALUE + 1
@@ -119,11 +119,10 @@ def tidb_snapshot_stream(
     Snapshot phase = the table's committed state at ``resolved_ts``,
     scanned as ``n_ranges`` parallel key-range chunks (each chunk an
     independent predicate-pushed scan, as each TiKV subtask scans its
-    KeyRange); rows enter the changelog as +I at seq=resolved_ts.
-    Stream phase = committed events with commit_ts > resolved_ts (the
-    CDC client started AT resolved_ts — no gap, no overlap, unlike the
-    OceanBase path which overlaps and dedupes). The final materialize
-    merges both by max-seq upsert semantics.
+    KeyRange). Stream phase = committed events with commit_ts >
+    resolved_ts (the CDC client started AT resolved_ts — no gap, no
+    overlap, unlike the OceanBase path which overlaps and dedupes). The
+    final materialize folds the stream over the snapshot (``base=``).
     """
     key = keys[0]
     # the resolution joins feed both phases and the snapshot state feeds
@@ -142,10 +141,5 @@ def tidb_snapshot_stream(
     snap = parts[0]
     for p in parts[1:]:
         snap = snap.unionByName(p)
-    from flink_cdc_2_3_0_src_spark.model import OP_INSERT
-
-    snap_log = snap.withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
-        SEQ_COL, F.lit(resolved_ts).cast("long")
-    )
     stream = committed.filter(F.col(SEQ_COL) > resolved_ts)
-    return materialize(snap_log.unionByName(stream, allowMissingColumns=False), keys)
+    return materialize(stream, keys, base=snap)

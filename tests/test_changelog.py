@@ -1194,7 +1194,7 @@ def test_control_rows_never_ghost_state_across_op_layer(spark):
     """+H/+S control rows (no row image, all-null payload) must be
     inert in EVERY state-building operator: materialize, compact,
     normalize_upsert, scd2_history, merge_agg_state, signed_agg,
-    agg_auto — not just signed_multiset/_upsert_table_state (the r8/r9
+    agg_auto — not just signed_multiset/table state (the r8/r9
     fixes).  Each would otherwise grow a ghost null-key row or count."""
     from flink_cdc_2_3_0_src_spark.operators.changelog import (
         agg_auto,

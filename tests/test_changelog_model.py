@@ -1,7 +1,7 @@
 """Model-based randomized testing of the core changelog operators:
 a pure-Python reference state machine replays random upsert logs and
 must agree with materialize / normalize_upsert / signed aggregation /
-compaction on every generated case."""
+compaction / the ``base=`` fold on every generated case."""
 
 from __future__ import annotations
 
@@ -72,3 +72,10 @@ def test_operators_agree_with_reference_model(spark, seed):
     comp = compact_changelog(df, ["k"]).withColumn(SEQ_COL, F.lit(0).cast("long"))
     got_c = {r["k"]: r["v"] for r in materialize(comp, ["k"]).collect()}
     assert got_c == expect
+
+    # fold law (the sink, chunk backfill, OceanBase and TiDB merges):
+    # the tail folded over the materialized prefix == the whole log
+    t = random.Random(seed).randrange(len(rows) + 1)
+    prefix = materialize(df.filter(F.col(SEQ_COL) <= t), ["k"])
+    folded = materialize(df.filter(F.col(SEQ_COL) > t), ["k"], base=prefix)
+    assert {r["k"]: r["v"] for r in folded.collect()} == expect

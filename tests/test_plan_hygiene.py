@@ -160,3 +160,49 @@ def test_distinct_delta_lineage_is_affected_group_restricted(spark):
     plan_str = delta._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftSemi" in plan_str, plan_str
     assert {r["g"] for r in delta.collect()} == {0}
+
+
+def test_upsert_kernel_shuffle_counts(spark, tmp_path, monkeypatch):
+    """Pin the shuffles of the ``materialize(base=)`` hot paths over a
+    400-row synthetic log: a sink merge is ONE keyed shuffle (state and
+    batch folded together), a chunk is two (scan + backfill fold), and
+    a two-chunk ``HybridPipeline.run`` is five.  A change that adds a
+    shuffle to any of them fails here."""
+    from pyspark.sql import functions as F
+
+    from flink_cdc_2_3_0_src_spark.model import OP_COL, SEQ_COL, ChunkRange
+    from flink_cdc_2_3_0_src_spark.streaming import sink as sink_mod
+    from flink_cdc_2_3_0_src_spark.streaming.hybrid import HybridPipeline
+
+    def shuffles(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("Exchange hashpartitioning")
+
+    log = spark.range(400).select(
+        (F.col("id") % 40).alias("k"),
+        (F.col("id") * 2).alias("v"),
+        F.when(F.col("id") % 7 == 0, "-D")
+        .when(F.col("id") < 40, "+I")
+        .otherwise("+U")
+        .alias(OP_COL),
+        F.col("id").alias(SEQ_COL),
+    )
+    merged = []
+    kernel = sink_mod.materialize
+
+    def capture(*args, **kwargs):
+        out = kernel(*args, **kwargs)
+        merged.append(out)
+        return out
+
+    monkeypatch.setattr(sink_mod, "materialize", capture)
+    sink = sink_mod.UpsertParquetSink(spark, str(tmp_path / "sink"), ["k"])
+    sink.merge_batch(log.filter(F.col(SEQ_COL) < 200), 0)
+    sink.merge_batch(log.filter(F.col(SEQ_COL) >= 200), 1)
+    assert [shuffles(d) for d in merged] == [1, 1]
+
+    p = HybridPipeline(spark, log, ["k"])
+    assert shuffles(p.snapshot_chunk(ChunkRange(None, 20), "k", 100, 300)) == 2
+    chunks = [ChunkRange(None, 20), ChunkRange(20, None)]
+    ran = p.run(chunks, "k", watermarks=lambda i: (100 + 100 * i, 200 + 100 * i))
+    assert shuffles(ran) == 5

@@ -149,3 +149,16 @@ def test_spread_min_bytes_gate(spark):
     )
     assert "Exchange" not in _plan(hinted)
     assert max_partition_bytes(spark) > 0
+    # every byte-string suffix Spark accepts parses, "t" included; the
+    # session conf is restored afterwards
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key, None)
+    try:
+        for raw, want in (("1t", 1 << 40), ("64m", 64 << 20)):
+            spark.conf.set(key, raw)
+            assert max_partition_bytes(spark) == want
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

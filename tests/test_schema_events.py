@@ -71,9 +71,8 @@ def test_schema_changes_emitted_when_enabled(spark, tmp_path):
 
 
 def test_stream_filter_always_passes_schema_events(spark):
-    """A10: schema/signal records bypass the chunk-HW emission filter in
-    BOTH filter forms (reference shouldEmit always passes non-data
-    events)."""
+    """A10: schema/signal records bypass the chunk-HW emission filter
+    (reference shouldEmit always passes non-data events)."""
     log = scripted_changelog(spark, SF_SMOKE)
     p = HybridPipeline(spark, log, ["user_id"])
     chunks = [ChunkRange(None, 10), ChunkRange(10, None)]
@@ -86,10 +85,9 @@ def test_stream_filter_always_passes_schema_events(spark):
         [(None, None, None, OP_SCHEMA, 50)], log.schema
     )
     events = log.unionByName(ddl)
-    for out in (p.stream_filter(events, manifest),
-                p.stream_filter_join(events, manifest)):
-        got = out.filter(F.col(OP_COL) == OP_SCHEMA).collect()
-        assert len(got) == 1 and got[0][SEQ_COL] == 50
+    out = p.stream_filter(events, manifest)
+    got = out.filter(F.col(OP_COL) == OP_SCHEMA).collect()
+    assert len(got) == 1 and got[0][SEQ_COL] == 50
 
 
 def test_sharded_and_splitvector_chunks(spark):
